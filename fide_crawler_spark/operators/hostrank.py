@@ -59,66 +59,75 @@ def pagerank(
     # job that fills the cache.  Intra-invocation only (unpersisted on
     # return); sf0.1 A/B best-of-5: 6.93 → 5.69 s with a far tighter
     # spread, bit-identical ranks.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:  # empty edge set: no nodes, no ranks (ADVICE r5 —
-        # scale // n would raise ZeroDivisionError below)
-        nodes.unpersist()
-        e.unpersist()
-        return nodes.select(
-            "node", F.lit(0).cast("bigint").alias("rank")
+    # Every cache is released in the finally — on every return path
+    # (iters=0 and the empty edge set included) and on exceptions.
+    # Safe even when the result still references nodes lazily
+    # (iters=0): unpersist only drops the cached copy, the plan
+    # recomputes on consumption.
+    caches: list = []
+    try:
+        e = (
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct()
+            .persist()
         )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # pre-fold the damping numerator into the edge table so each
-    # iteration is join + groupBy only.  Lazy persist (r6, the r5
-    # verdict's suggestion): iteration 1's own contrib job materializes
-    # the cache — the CC lazy-checkpoint trick — instead of a separate
-    # eager count() job paying the distinct+join cost up front
-    # (one full pass over the edge derivation removed; A/B in
-    # BENCH/BASELINE.md round-6 notes).
-    ed = e.join(outdeg, "src").persist()
-
-    base = (scale * (damping_den - damping_num)) // (damping_den * n)
-    ranks = nodes.select("node", F.lit(scale // n).cast("bigint").alias("r"))
-    for _ in range(iters):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(r * {damping_num}) div ({damping_den} * outdeg)")
-                .alias("c"),
+        caches.append(e)
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .persist()
+        )
+        caches.append(nodes)
+        n = nodes.count()
+        if n == 0:  # empty edge set: no nodes, no ranks (ADVICE r5 —
+            # scale // n would raise ZeroDivisionError below)
+            return nodes.select(
+                "node", F.lit(0).cast("bigint").alias("rank")
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
+        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+        # pre-fold the damping numerator into the edge table so each
+        # iteration is join + groupBy only.  Lazy persist (r6, the r5
+        # verdict's suggestion): iteration 1's own contrib job
+        # materializes the cache — the CC lazy-checkpoint trick —
+        # instead of a separate eager count() job paying the
+        # distinct+join cost up front (one full pass over the edge
+        # derivation removed; A/B in BENCH/BASELINE.md round-6 notes).
+        ed = e.join(outdeg, "src").persist()
+        caches.append(ed)
+
+        base = (scale * (damping_den - damping_num)) // (damping_den * n)
+        ranks = nodes.select(
+            "node", F.lit(scale // n).cast("bigint").alias("r")
         )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(base) + F.coalesce(F.col("c"), F.lit(0)))
-            .cast("bigint")
-            .alias("r"),
-        )
-        # truncate lineage each round (GraphX-style): without this the
-        # rank plan re-embeds the edge derivation per iteration — the
-        # self-join's attribute dedup defeats cache replacement and the
-        # physical plan grows ~40 nodes/round.  localCheckpoint keeps
-        # the partitions executor-side; on a real cluster with lineage-
-        # durability requirements use spark.sparkContext.setCheckpointDir
-        # + .checkpoint() instead.
-        ranks = ranks.localCheckpoint(eager=True)
-    # unconditional (ADVICE r5: iters=0 leaked both caches).  Safe even
-    # when ranks still references nodes lazily (iters=0): unpersist
-    # only drops the cached copy, the plan recomputes on consumption.
-    nodes.unpersist()
-    ed.unpersist()
-    e.unpersist()
-    return ranks.withColumnRenamed("r", "rank")
+        for _ in range(iters):
+            contrib = (
+                ed.join(ranks, ed["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    F.expr(
+                        f"(r * {damping_num}) div ({damping_den} * outdeg)"
+                    ).alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("c"))
+            )
+            ranks = nodes.join(contrib, "node", "left").select(
+                "node",
+                (F.lit(base) + F.coalesce(F.col("c"), F.lit(0)))
+                .cast("bigint")
+                .alias("r"),
+            )
+            # truncate lineage each round (GraphX-style): without this
+            # the rank plan re-embeds the edge derivation per iteration
+            # — the self-join's attribute dedup defeats cache
+            # replacement and the physical plan grows ~40 nodes/round.
+            # localCheckpoint keeps the partitions executor-side; on a
+            # real cluster with lineage-durability requirements use
+            # spark.sparkContext.setCheckpointDir + .checkpoint()
+            # instead.
+            ranks = ranks.localCheckpoint(eager=True)
+        return ranks.withColumnRenamed("r", "rank")
+    finally:
+        for c in caches:
+            c.unpersist()

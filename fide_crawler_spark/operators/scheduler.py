@@ -198,41 +198,45 @@ class CrawlJob:
         frontier = self.frontier_tbl.read(spark)
         pending = frontier.filter(F.col("status") == "pending")
 
-        # URL-seen: Bloom pre-pass over fetched set, exact anti-join
-        # backstop.  Skipped while the seen set is provably empty (no
-        # successful fetch yet, per snapshot metrics).
-        m = self.frontier_tbl.manifest()["metrics"]
-        bloom = PartitionedBloom.from_bytes(self.frontier_tbl.state(BLOOM_STATE))
-        if int(m.get("total", -1)) == int(m["pending"]):
-            candidates = pending
-        else:
-            seen = frontier.filter(F.col("status") == "fetched")
-            candidates = filter_unseen(spark, pending, seen, bloom)
-
-        # fused dequeue: politeness budget per host + global crawl rank
-        # in one sorted pass (operators/rank.py dequeue_rank — a
-        # windowed rank would serialize the batch into one task).
-        # _caches registers the operator's persisted sort layout so it
-        # is released at epoch end (it would leak one candidate-set-
-        # sized cache per epoch otherwise).
+        # Every cache this epoch creates is registered in _caches and
+        # released in the one finally below — on exception paths too,
+        # or each would hold a candidate-set-sized cache for the rest
+        # of the session.
         _caches: list = []
         _stats: dict = {}
-        # Persist the candidate set before ranking: dequeue_rank's
-        # range-boundary sample job and its shuffle map both scan the
-        # input, so without this the URL-seen chain (Bloom prepass +
-        # exact anti-join) runs TWICE per epoch — pure per-epoch
-        # overhead that does not shrink with executor count.  Disk-
-        # spillable, bounded by the pending set — the same order as the
-        # sorted layout dequeue_rank itself persists.
-        candidates = candidates.persist()
-        _caches.append(candidates)
-        with _phase(prof, "dequeue"):
-            batch = dequeue_rank(
-                candidates, "host", priority_order(), self.budget, "rank",
-                caches=_caches, stats_out=_stats,
-            ).persist()
-        _caches.append(batch)
         try:
+            # URL-seen: Bloom pre-pass over fetched set, exact anti-join
+            # backstop.  Skipped while the seen set is provably empty (no
+            # successful fetch yet, per snapshot metrics).  The probe
+            # result is cached in _caches so the pandas probe runs once
+            # per candidate, not once per union branch.
+            m = self.frontier_tbl.manifest()["metrics"]
+            bloom = PartitionedBloom.from_bytes(self.frontier_tbl.state(BLOOM_STATE))
+            if int(m.get("total", -1)) == int(m["pending"]):
+                candidates = pending
+            else:
+                seen = frontier.filter(F.col("status") == "fetched")
+                candidates = filter_unseen(spark, pending, seen, bloom, caches=_caches)
+
+            # Persist the candidate set before ranking: dequeue_rank's
+            # range-boundary sample job and its shuffle map both scan the
+            # input, so without this the URL-seen chain (Bloom prepass +
+            # exact anti-join) runs TWICE per epoch — pure per-epoch
+            # overhead that does not shrink with executor count.  Disk-
+            # spillable, bounded by the pending set — the same order as
+            # the sorted layout dequeue_rank itself persists.
+            candidates = candidates.persist()
+            _caches.append(candidates)
+            # fused dequeue: politeness budget per host + global crawl
+            # rank in one sorted pass (operators/rank.py dequeue_rank — a
+            # windowed rank would serialize the batch into one task); it
+            # registers its persisted sort layout in _caches.
+            with _phase(prof, "dequeue"):
+                batch = dequeue_rank(
+                    candidates, "host", priority_order(), self.budget, "rank",
+                    caches=_caches, stats_out=_stats,
+                ).persist()
+            _caches.append(batch)
             return self._run_epoch_body(
                 spark, e, m, frontier, bloom, batch, _stats["n_survivors"],
                 prof,
@@ -354,8 +358,8 @@ class CrawlJob:
             .drop("_new_status")
         )
 
-        # Bloom maintenance: distributed partial build over this epoch's
-        # fetched hashes (from the committed files), OR-merged
+        # Bloom maintenance: one JVM aggregate over this epoch's fetched
+        # hashes (from the committed files), OR-merged
         with _phase(prof, "bloom_build"):
             epoch_bloom = build_bloom(
                 fetched_keys.select(F.xxhash64("url").alias("url_hash")),

@@ -122,8 +122,12 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_ngram_topk(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
+def corpus_ngram_topk(
+    docs: DataFrame, n: int = 2, k: int = 20, id_col: str = "doc_id"
+) -> DataFrame:
     """Corpus-level top-k word n-grams — the vocabulary/BPE-prep sweep.
+    ``docs`` needs a ``text`` column and a document id column named by
+    ``id_col`` (passed through to ``shingle_docs``).
     Counts DOC FREQUENCY (shingles_col dedups within a doc).  Classic
     word-count shape: explode → partial-combined count → one shuffle —
     keyed on ``xxhash64(gram)`` (8-byte fixed-width key instead of a
@@ -138,7 +142,7 @@ def corpus_ngram_topk(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     # shingle_docs hoists the token split into its own projection — the
     # inline shingles_col form re-splits the text once PER SHINGLE
     # (HOF lambdas are interpreted, no subexpression elimination).
-    grams = shingle_docs(docs, n=n, out_col="__sh").select(
+    grams = shingle_docs(docs, n=n, id_col=id_col, out_col="__sh").select(
         F.explode("__sh").alias("gram")
     )
     return (

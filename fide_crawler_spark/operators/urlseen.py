@@ -7,13 +7,15 @@ refetching months inside the cached range
 membership structure:
 
 * **PartitionedBloom** — the frontier hash space is split into
-  ``n_parts`` sub-filters keyed by ``url_hash % n_parts``.  Each part is
-  built executor-side (``mapInPandas`` partial filters, OR-merged), so
-  no single filter needs to hold 10^10 elements; parts are persisted as
-  per-snapshot state files and co-partitioned with the frontier.  Probe
-  order: Bloom pre-pass (no false negatives → definite-unseen rows skip
-  the join entirely), then an exact ``left_anti`` join only for the
-  maybe-seen minority (SURVEY G11/C3).
+  ``n_parts`` sub-filters keyed by ``url_hash % n_parts``.  The bits to
+  set are computed in the JVM by one aggregate — (part, 64-bit word) →
+  OR of the word's set bits — and the driver ORs the collected words
+  into its parts, so no Python worker runs and driver traffic is
+  bounded by the filter's size, never the hash count; parts are
+  persisted as per-snapshot state files and co-partitioned with the
+  frontier.  Probe order: Bloom pre-pass (no false negatives →
+  definite-unseen rows skip the join entirely), then an exact
+  ``left_anti`` join only for the maybe-seen minority (SURVEY G11/C3).
 * **CuckooFilter** — supports deletion (forced recrawl re-admits a URL
   by deleting its fingerprint), which Bloom cannot.  Standard
   4-slot-bucket cuckoo hashing with 16-bit fingerprints.
@@ -47,6 +49,9 @@ class PartitionedBloom:
         # power-of-2 so signed pmod (Spark) and uint64 modulo (numpy)
         # agree on part assignment for the same 64-bit pattern
         assert n_parts & (n_parts - 1) == 0, "n_parts must be a power of 2"
+        # whole 64-bit words: build_bloom ORs little-endian uint64 words
+        # (bit pos % 64 of word pos // 64) into the byte layout below
+        assert bits_per_part % 64 == 0, "bits_per_part must be a multiple of 64"
         self.n_parts = n_parts
         self.bits = bits_per_part
         self.k = k
@@ -110,44 +115,46 @@ class PartitionedBloom:
         return bf
 
 
+def _bloom_words(
+    df: DataFrame, hash_col: str, n_parts: int, bits_per_part: int, k: int,
+) -> DataFrame:
+    """(part, word, bits): for every 64-bit word of every sub-filter that
+    ``df``'s hashes touch, the OR of the bits they set in it.  The same
+    positions as :meth:`PartitionedBloom._positions` — ``h1``/``h2`` are
+    the unsigned 32-bit halves, so ``h1 + i*h2`` never overflows a
+    signed long and ``pmod`` equals numpy's uint64 modulo; the part is
+    ``pmod(h, n_parts)``, which matches the uint64 modulo for a
+    power-of-two ``n_parts``."""
+    h = F.col(hash_col).cast("long")
+    h1 = F.shiftrightunsigned(h, 32)
+    h2 = h.bitwiseAND(F.lit(0xFFFFFFFF))
+    pos = F.explode(F.array(*[
+        F.pmod(h1 + F.lit(i) * h2, F.lit(bits_per_part)) for i in range(k)
+    ]))
+    return (
+        df.select(F.pmod(h, F.lit(n_parts)).alias("part"), pos.alias("pos"))
+        .groupBy("part", F.shiftright("pos", 6).alias("word"))
+        # shiftleft's Python form takes only a literal shift count
+        .agg(F.bit_or(F.expr("shiftleft(1L, pos % 64)")).alias("bits"))
+    )
+
+
 def build_bloom(
     df: DataFrame, hash_col: str = "url_hash",
     n_parts: int = 8, bits_per_part: int = 1 << 20, k: int = 5,
 ) -> PartitionedBloom:
-    """Distributed build, co-partitioned with the filter: hashes are
-    shuffled by sub-filter id (``hash % n_parts``) so each task builds
-    only its own part(s) and ships exactly those bytes — total traffic
-    = one filter (n_parts × bits/8), independent of task count, never
-    the hashes."""
-    part_bytes = bits_per_part // 8
-
-    def build_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, PartitionedBloom] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            hashes = pdf[hash_col].to_numpy().astype(np.uint64)
-            pids = (hashes % np.uint64(n_parts)).astype(np.int64)
-            for pid in np.unique(pids):
-                bf = local.setdefault(
-                    int(pid), PartitionedBloom(n_parts, bits_per_part, k)
-                )
-                bf.add_hashes(hashes[pids == pid])
-        for pid, bf in local.items():
-            yield pd.DataFrame({"part": [pid], "blob": [bf.parts[pid].tobytes()]})
-
-    rows = (
-        df.select(F.col(hash_col).cast("long").alias(hash_col))
-        .repartition(n_parts, F.pmod(F.col(hash_col), F.lit(n_parts)))
-        .mapInPandas(build_parts, schema="part int, blob binary")
-        .collect()
-    )
-    merged = PartitionedBloom(n_parts, bits_per_part, k)
-    for row in rows:
-        arr = np.frombuffer(bytes(row.blob), dtype=np.uint8)
-        assert arr.size == part_bytes
-        np.bitwise_or(merged.parts[int(row.part)], arr, out=merged.parts[int(row.part)])
-    return merged
+    """Filter of ``df``'s hashes, built by one JVM aggregate: each hash
+    explodes into its k bit positions, which are OR-combined per
+    (part, 64-bit word), partially on the map side.  The collected rows
+    are bounded by the filter's own size (n_parts × bits/64 words),
+    never by the number of hashes, and the driver ORs each word into
+    the part's little-endian uint64 view — byte-identical to
+    :meth:`PartitionedBloom.add_hashes` on the same hashes."""
+    bf = PartitionedBloom(n_parts, bits_per_part, k)
+    words = [p.view("<u8") for p in bf.parts]
+    for r in _bloom_words(df, hash_col, n_parts, bits_per_part, k).collect():
+        words[r["part"]][r["word"]] |= np.uint64(r["bits"] & 0xFFFFFFFFFFFFFFFF)
+    return bf
 
 
 def bloom_probe_col(spark, bloom: PartitionedBloom, hash_col: str = "url_hash"):
@@ -174,16 +181,27 @@ def filter_unseen(
     seen: DataFrame,
     bloom: PartitionedBloom | None,
     hash_col: str = "url_hash",
+    *,
+    caches: list,
 ) -> DataFrame:
     """Definitely-unseen (Bloom negative) rows bypass the join; only the
     maybe-seen minority pays the exact ``left_anti`` backstop (SURVEY
     C3).  With a healthy FPP the anti-join side is ~|seen ∩ candidates|
     + ε, not |candidates|.
+
+    Both branches read the probed candidates, so the probe result is
+    persisted once and appended to ``caches``, which the caller
+    releases after its last action on the result.  Uncached, each
+    branch would re-run the pandas probe, and the anti-join's inferred
+    filter would run it over the whole seen side too.
     """
     seen_keys = seen.select(hash_col).distinct()
     if bloom is None:
         return candidates.join(seen_keys, hash_col, "left_anti")
-    probed = candidates.withColumn("_maybe", bloom_probe_col(spark, bloom, hash_col))
+    probed = candidates.withColumn(
+        "_maybe", bloom_probe_col(spark, bloom, hash_col)
+    ).persist()
+    caches.append(probed)
     sure_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     checked = (
         probed.filter(F.col("_maybe")).drop("_maybe")
@@ -360,10 +378,10 @@ def update_cuckoo(
 
     ``new_hashes`` (this epoch's fetched url_hash rows) are shuffled by
     part id; each task inserts into its own part(s) of the broadcast
-    filter and ships back only the mutated part blobs — the exact
-    protocol of :func:`build_bloom`.  A part that overflows is rebuilt
-    bigger in a second pass from ``all_hashes`` (the source of truth,
-    e.g. every fetched row of the frontier) — again executor-side,
+    filter and ships back only the mutated part blobs.  A part that
+    overflows is rebuilt bigger in a second pass from ``all_hashes``
+    (the source of truth, e.g. every fetched row of the frontier) —
+    again executor-side,
     touching only the overflowing part ids: a task holds one part's
     full hash set (|fetched| / n_parts — size n_parts so this fits),
     never the whole seen set, and the driver never collects a hash.

@@ -116,7 +116,6 @@ def make_curation_processor(
         if os.path.exists(ST.marker_path(commits_dir, batch_id)):
             return  # replayed, fully committed batch — no-op
         committed = ST.committed_ids(commits_dir)
-        keep = ST.committed_filter(committed, batch_id)
         batch_df = batch_df.localCheckpoint()  # feeds freq AND strip
 
         # 1. boilerplate: accumulated doc-frequency = committed batches
@@ -127,10 +126,9 @@ def make_curation_processor(
             .localCheckpoint()  # written below AND summed here
         )
         if committed:
-            prev_lf = (
-                spark.read.parquet(linefreq_path).filter(keep)
-                .select("line_key", "doc_freq")
-            )
+            prev_lf = ST.read_committed(
+                spark, linefreq_path, committed
+            ).select("line_key", "doc_freq")
             total_lf = (
                 prev_lf.unionByName(batch_lf)
                 .groupBy("line_key")
@@ -151,10 +149,8 @@ def make_curation_processor(
         # 2. near-dup vs the committed corpus (batch × corpus, never
         #    corpus × corpus)
         if committed:
-            corpus = (
-                spark.read.parquet(corpus_path).filter(keep).drop("batch_id")
-            )
-            cb = spark.read.parquet(bands_path).filter(keep).drop("batch_id")
+            corpus = ST.read_committed(spark, corpus_path, committed)
+            cb = ST.read_committed(spark, bands_path, committed)
             survivors = incremental_dedup(
                 cleaned, corpus, threshold=threshold, k=k, bands=bands,
                 corpus_bands=cb,
@@ -253,20 +249,14 @@ def start_curation_stream(
 def read_curated_sequences(spark: SparkSession, state_dir: str) -> DataFrame:
     """All committed training-sequence piece rows (seq_len mode)."""
     commits_dir = os.path.join(state_dir, "_commits")
-    ids = ST.committed_ids(commits_dir)
-    return (
-        spark.read.parquet(os.path.join(state_dir, "sequences"))
-        .filter(F.col("batch_id").isin(ids))
-        .drop("batch_id")
+    return ST.read_committed(
+        spark, os.path.join(state_dir, "sequences"), ST.committed_ids(commits_dir)
     )
 
 
 def read_curated_shards(spark: SparkSession, state_dir: str) -> DataFrame:
     """All committed packed chunk rows (the training-shard set)."""
     commits_dir = os.path.join(state_dir, "_commits")
-    ids = ST.committed_ids(commits_dir)
-    return (
-        spark.read.parquet(os.path.join(state_dir, "shards"))
-        .filter(F.col("batch_id").isin(ids))
-        .drop("batch_id")
+    return ST.read_committed(
+        spark, os.path.join(state_dir, "shards"), ST.committed_ids(commits_dir)
     )

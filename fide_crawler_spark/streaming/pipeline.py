@@ -203,7 +203,7 @@ def start_incremental_dedup_stream(
     writes its three outputs into per-batch ``batch_id=<n>`` partition
     directories (``mode=overwrite`` — a crashed half-written attempt is
     replaced wholesale on replay), then atomically publishes a commit
-    marker under ``_commits/``.  Reads see only COMMITTED batch
+    marker under ``_commits/``.  Reads list only COMMITTED batch
     partitions, so a replayed batch never finds its own half-committed
     docs in the corpus (which would make it dedup against itself and
     drop every survivor), and a crash between the corpus and bands
@@ -240,8 +240,8 @@ def make_incremental_dedup_processor(
     Commit protocol (see ``start_incremental_dedup_stream``): write the
     batch's corpus/bands/survivors outputs into ``batch_id=<n>``
     partition dirs with overwrite, then rename a ``_commits/batch-<n>``
-    marker into place.  Readers filter to committed batch ids (partition
-    pruning — uncommitted leftovers are never scanned).
+    marker into place.  Readers list only the committed batch
+    partitions — uncommitted leftovers are never opened.
     """
     import os
 
@@ -262,14 +262,9 @@ def make_incremental_dedup_processor(
             return  # replayed, fully committed batch — no-op
         committed = ST.committed_ids(commits_dir)
         batch_df = batch_df.localCheckpoint()  # pin: joined twice below
-        keep = ST.committed_filter(committed, batch_id)
         if committed:
-            corpus = (
-                spark.read.parquet(corpus_path).filter(keep).drop("batch_id")
-            )
-            cb = (
-                spark.read.parquet(bands_path).filter(keep).drop("batch_id")
-            )
+            corpus = ST.read_committed(spark, corpus_path, committed)
+            cb = ST.read_committed(spark, bands_path, committed)
             survivors = incremental_dedup(
                 batch_df, corpus, threshold=threshold, k=k, bands=bands,
                 corpus_bands=cb,

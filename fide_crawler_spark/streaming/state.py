@@ -10,8 +10,9 @@ discipline:
    attempt is replaced wholesale on replay);
 2. AFTER all writes succeed, a JSON commit marker is atomically renamed
    into ``_commits/``;
-3. readers filter state tables to COMMITTED batch ids only (partition
-   pruning — uncommitted leftovers are never scanned);
+3. readers list only the COMMITTED ``batch_id=<n>`` directories
+   (:func:`read_committed`) — uncommitted leftovers are never listed,
+   so neither a scan nor schema inference can open one;
 4. a replay of a fully committed batch is a no-op.
 
 At cluster scale the markers are snapshot properties on Iceberg
@@ -23,8 +24,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def committed_ids(commits_dir: str) -> list[int]:
@@ -38,15 +38,16 @@ def committed_ids(commits_dir: str) -> list[int]:
     )
 
 
-def committed_filter(committed: list[int], batch_id: int) -> Column:
-    """Partition filter selecting committed state.  Under the stream's
-    serialized foreachBatch the committed set is a contiguous prefix of
-    batch ids, so the usual predicate is a constant-size range filter
-    (no ever-growing IN-list on an unbounded stream); the explicit id
-    list only backs the gap case (manual/out-of-order calls)."""
-    if committed == list(range(batch_id)):
-        return F.col("batch_id") < batch_id
-    return F.col("batch_id").isin(committed)
+def read_committed(spark: SparkSession, root: str, committed: list[int]) -> DataFrame:
+    """The committed partitions of one state table, without ``batch_id``.
+    Only the ``batch_id=<i>`` directories of ``committed`` are listed, so
+    parquet footer inference never lands on a crashed attempt's
+    half-written file, wherever it sorts in the table's listing."""
+    return (
+        spark.read.option("basePath", root)
+        .parquet(*(os.path.join(root, f"batch_id={i}") for i in committed))
+        .drop("batch_id")
+    )
 
 
 def marker_path(commits_dir: str, batch_id: int) -> str:

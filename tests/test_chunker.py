@@ -113,3 +113,17 @@ def test_quantile_filter_above_below(spark):
     # approx path returns a superset/subset near the same cut, same schema
     ap = quantile_filter(docs, "s", 0.9).collect()
     assert {r["doc_id"] for r in ap} and all(r["s"] >= 85 for r in ap)
+
+
+def test_corpus_ngram_topk_custom_id_col(spark):
+    """The id column is a parameter: a frame that names it something
+    other than doc_id gets the same doc-frequency counts."""
+    from fide_crawler_spark.operators.textstats import corpus_ngram_topk
+
+    rows = [(0, "a b a b"), (1, "a b c"), (2, "c d")]
+    want = [("a b", 2), ("b a", 1), ("b c", 1), ("c d", 1)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    page = spark.createDataFrame(rows, "page_key long, text string")
+    assert [tuple(r) for r in corpus_ngram_topk(docs, n=2, k=4).collect()] == want
+    got = corpus_ngram_topk(page, n=2, k=4, id_col="page_key").collect()
+    assert [tuple(r) for r in got] == want

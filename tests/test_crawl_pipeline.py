@@ -296,3 +296,45 @@ def test_compaction_cycle_reclaims_doc_filesets(spark, frontier_rows, tmp_path):
         if d.startswith("snap-") and not d.endswith(".staging")
     ]
     assert len(on_disk) <= len(m["data_paths"]) + 2
+
+
+def test_epoch_caches_released_when_dequeue_raises(
+    spark, frontier_rows, oracle, tmp_path, monkeypatch
+):
+    """Every cache an epoch creates — the URL-seen probe result and the
+    candidate set — is released when a later step of the epoch raises,
+    and the job still finishes identically afterwards."""
+    import fide_crawler_spark.operators.scheduler as sched
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+
+    j = CrawlJob(spark, str(tmp_path / "raise"), budget_per_host=BUDGET, n_salts=2)
+    j.init(spark.createDataFrame(frontier_rows))
+    j.run_epoch()  # something fetched → the next epoch runs URL-seen
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    persisted: list = []
+    real_persist = DataFrame.persist
+
+    def tracking_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    def failing_dequeue(df, *a, **kw):
+        df.count()  # materialize the probe and candidate caches first
+        raise RuntimeError("dequeue failed")
+
+    monkeypatch.setattr(DataFrame, "persist", tracking_persist)
+    monkeypatch.setattr(sched, "dequeue_rank", failing_dequeue)
+    with pytest.raises(RuntimeError, match="dequeue failed"):
+        j.run_epoch()
+    assert len(persisted) == 2
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+    for df in persisted:
+        level = df.storageLevel
+        assert not (level.useMemory or level.useDisk)
+
+    monkeypatch.undo()
+    j.run()
+    assert j.crawl_order() == oracle.crawl_order

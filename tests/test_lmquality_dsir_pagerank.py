@@ -288,3 +288,28 @@ def test_pagerank_empty_edges(spark):
     """ADVICE r5: scale // n with n=0 raised ZeroDivisionError."""
     e = spark.createDataFrame([], "src string, dst string")
     assert pagerank(e, iters=3).count() == 0
+
+
+def test_pagerank_releases_caches_when_iteration_raises(spark, monkeypatch):
+    """An exception mid-iteration releases the edge, node and
+    outdeg-folded caches, not only the normal return paths."""
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    persisted: list = []
+    real_persist = DataFrame.persist
+
+    def tracking_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    def failing_checkpoint(self, *a, **kw):
+        raise RuntimeError("iteration failed")
+
+    monkeypatch.setattr(DataFrame, "persist", tracking_persist)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", failing_checkpoint)
+    e = spark.createDataFrame(EDGES, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="iteration failed"):
+        pagerank(e, iters=3)
+    assert len(persisted) == 3
+    for df in persisted:
+        level = df.storageLevel
+        assert not (level.useMemory or level.useDisk)

@@ -306,6 +306,18 @@ def test_crash_window_every_cut_point(spark, tmp_path):
     crashed process would not yet have written, and (to model a
     half-written next sink) planting a junk file in the first missing
     partition dir — mode("overwrite") must clobber it."""
+    _check_crash_windows(spark, tmp_path, 0, 1)
+
+
+def test_crash_window_junk_sorting_first(spark, tmp_path):
+    """The same cuts with batch ids 9 and 10: the junk partition
+    ``batch_id=10`` sorts before the committed ``batch_id=9`` in a
+    sink's listing, so replay must never list it (footer inference
+    would otherwise open it first), not merely filter its rows out."""
+    _check_crash_windows(spark, tmp_path, 9, 10)
+
+
+def _check_crash_windows(spark, tmp_path, first: int, second: int):
     SINKS = ["linefreq", "corpus", "bands", "shards", "sequences"]
     params = dict(PARAMS, seq_len=8)
 
@@ -316,29 +328,30 @@ def test_crash_window_every_cut_point(spark, tmp_path):
             out[sub] = sorted(tuple(r) for r in df.collect())
         return out
 
-    # uninterrupted reference run (batches 0 and 1)
+    # uninterrupted reference run
     ref_state = str(tmp_path / "ref")
     ref = make_curation_processor(spark, ref_state, **params)
-    ref(_df(spark, BATCHES[0]), 0)
-    ref(_df(spark, BATCHES[1]), 1)
+    ref(_df(spark, BATCHES[0]), first)
+    ref(_df(spark, BATCHES[1]), second)
     want = snapshot(ref_state)
 
     for cut in range(len(SINKS) + 1):  # died after `cut` sink writes
         state = str(tmp_path / f"cut{cut}")
         proc = make_curation_processor(spark, state, **params)
-        proc(_df(spark, BATCHES[0]), 0)
-        proc(_df(spark, BATCHES[1]), 1)
-        # rewind batch 1 to the crash window: no marker, sinks >= cut
-        # missing, the next sink dir holding half-written junk
-        os.remove(os.path.join(state, "_commits", "batch-1.json"))
+        proc(_df(spark, BATCHES[0]), first)
+        proc(_df(spark, BATCHES[1]), second)
+        # rewind the second batch to the crash window: no marker,
+        # sinks >= cut missing, the next sink dir holding half-written
+        # junk
+        os.remove(os.path.join(state, "_commits", f"batch-{second}.json"))
         for sub in SINKS[cut:]:
-            part = os.path.join(state, sub, "batch_id=1")
+            part = os.path.join(state, sub, f"batch_id={second}")
             if os.path.exists(part):
                 shutil.rmtree(part)
         if cut < len(SINKS):
-            junk = os.path.join(state, SINKS[cut], "batch_id=1")
+            junk = os.path.join(state, SINKS[cut], f"batch_id={second}")
             os.makedirs(junk, exist_ok=True)
             with open(os.path.join(junk, "part-junk.parquet"), "w") as f:
                 f.write("not parquet")
-        proc(_df(spark, BATCHES[1]), 1)  # replay heals
+        proc(_df(spark, BATCHES[1]), second)  # replay heals
         assert snapshot(state) == want, f"cut after {cut} sink writes"
