@@ -360,27 +360,3 @@ def seed_frontier_rows(
             if month > 12:
                 month, year = 1, year + 1
     return rows
-
-
-SPAN_SCHEMA_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
-
-
-def documents_rows(fide_ids: list[str], start_period: str, n_months: int) -> list[dict]:
-    """Materialized interleaved-span documents table (input_hint shape)."""
-    rows = []
-    for fr in seed_frontier_rows(fide_ids, start_period, n_months):
-        url = fr["url"]
-        rows.append(
-            {
-                "doc_id": url,
-                "spans": [
-                    {"kind": s.kind, "text": s.text,
-                     "media_ref": s.media_ref, "offset": s.offset}
-                    for s in synth_spans(url)
-                ],
-            }
-        )
-    return rows

@@ -57,15 +57,6 @@ def lev_ratio_exact(a: Column | str, b: Column | str) -> Column:
     return ratio(a, b)
 
 
-def lev_similarity(a: Column | str, b: Column | str) -> Column:
-    """1 - levenshtein/greatest(len) — the normalized edit similarity
-    used by q8_similarity_join."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.lit(1.0) - F.levenshtein(a, b).cast("double") / F.greatest(
-        F.length(a), F.length(b)
-    )
-
-
 def profile_id(url: Column | str) -> Column:
     """H1: regexp_extract(r'/profile/(\\d+)')
     (data_fetching_processing.py:64-65)."""

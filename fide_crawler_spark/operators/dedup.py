@@ -68,35 +68,6 @@ def exact_dedup(docs: DataFrame, content_col: str = "text") -> DataFrame:
     return survivors
 
 
-def shingles_col(text_col: str = "text", n: int = 3):
-    """Word n-gram shingles as a deduped array — JVM higher-order
-    functions over split(), no UDF."""
-    toks = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    gram = lambda i: F.array_join(F.slice(toks, i + 1, n), " ")  # noqa: E731
-    return F.array_distinct(F.transform(idx, gram))
-
-
-def hashed_shingles_col(text_col: str = "text", n: int = 3):
-    """``shingles_col`` with ``xxhash64`` applied INSIDE the transform:
-    the array_distinct and the downstream explode then operate on
-    8-byte longs instead of ~n-word strings (measured ~10% on the
-    sf0.1 ngram-jaccard kernel end-to-end).  Set sizes match the
-    string path modulo 2^-64-scale hash collisions — the same
-    tolerance ``ngram_jaccard_pairs`` already accepts by joining on
-    hashed shingles.
-
-    Prefer :func:`hashed_shingle_docs` in operator code: higher-order
-    lambdas are interpreted (CodegenFallback), so the ``split`` baked
-    into this Column re-runs for EVERY sequence element; the DataFrame
-    helper hoists it into its own projection (measured 4.6× on the
-    sf0.1 shingle kernel)."""
-    toks = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    gram = lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, n), " "))  # noqa: E731
-    return F.array_distinct(F.transform(idx, gram))
-
-
 def shingle_docs(
     docs: DataFrame,
     n: int = 3,
@@ -387,7 +358,18 @@ def minhash_dedup(
     portable: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH dedup: banded candidates, exact-Jaccard verify,
-    survivors = docs not dominated by a smaller near-duplicate id."""
+    survivors = docs not dominated by a smaller near-duplicate id.
+
+    The shingle table below is a lazy ``localCheckpoint`` that this
+    function never releases: its blocks are freed by Spark's
+    ContextCleaner once the returned frame (whose lineage holds the
+    checkpointed RDD) is garbage-collected in the JVM.  A caller-released
+    registry like ``filter_unseen``'s ``caches`` does not fit here: the
+    result is lazy, and a local checkpoint whose blocks are dropped
+    cannot be recomputed — any later action on the result would fail —
+    so the release would have to follow the caller's last action, which
+    this function never sees.  Every catalog caller would have to thread
+    the registry through."""
     cands = minhash_lsh_candidates(
         docs, k=k, bands=bands, n=n, id_col=id_col, portable=portable
     )
@@ -706,8 +688,8 @@ def simhash(
     ``portable=True`` votes on md5h bits (DuckDB-reproducible).
 
     Shingles come from :func:`shingle_docs` (split hoisted into its own
-    projection) — the inline ``shingles_col`` form re-splits the text
-    once PER SHINGLE (HOF lambdas are interpreted; measured 1.94 →
+    projection) — a split inside the transform lambda would re-split the
+    text once PER SHINGLE (HOF lambdas are interpreted; measured 1.94 →
     1.06 s isolated on the sf0.1 q30 surface).
     """
     flat = (

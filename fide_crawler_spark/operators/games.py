@@ -47,14 +47,6 @@ def dedup_keepfirst(games: DataFrame, order_col: str = "id") -> DataFrame:
     )
 
 
-def process_game_history(games: DataFrame) -> DataFrame:
-    """data_fetching_processing.py:247-259: type, dedup (keep first in
-    date order, tie-broken by ingest id — pandas keeps the first row of
-    the date-sorted frame), drop null rows."""
-    deduped = dedup_keepfirst(games.na.drop(), order_col="id")
-    return deduped.orderBy("date", "id")
-
-
 def elo_evolution(games: DataFrame) -> DataFrame:
     """ui/streamlit_ui.py:130-150: first/last rating by date (G8),
     delta, avg opponent rating (G2), min/max date (G3), count (G4) —
@@ -122,25 +114,6 @@ def performance_pies(games: DataFrame) -> DataFrame:
     )
 
 
-def performance_details(games: DataFrame) -> DataFrame:
-    """ui/streamlit_ui.py:251-283: avg opponent rating overall + 6
-    (color, result) slices — the reference runs 7 filtered means; here
-    ONE pass of conditional averages (G2)."""
-    def cavg(pred):
-        return F.round(F.avg(F.when(pred, F.col("opponent_rating"))), 2)
-
-    r, c = F.col("result"), F.col("player_color")
-    return games.groupBy("fide_id").agg(
-        F.round(F.avg("opponent_rating"), 2).alias("overall_avg"),
-        cavg((c == "white") & (r == 1.0)).alias("wins_white_avg"),
-        cavg((c == "white") & (r == 0.5)).alias("draws_white_avg"),
-        cavg((c == "white") & (r == 0.0)).alias("losses_white_avg"),
-        cavg((c == "black") & (r == 1.0)).alias("wins_black_avg"),
-        cavg((c == "black") & (r == 0.5)).alias("draws_black_avg"),
-        cavg((c == "black") & (r == 0.0)).alias("losses_black_avg"),
-    )
-
-
 def filtered_history(
     games: DataFrame,
     results: list[float] | None = None,
@@ -162,19 +135,6 @@ def filtered_history(
     )
 
 
-def opponents_found(games: DataFrame) -> DataFrame:
-    """ui/streamlit_ui.py:325-327: sorted distinct opponents joined with
-    '/ ' (G7 + H15) plus the win/draw/loss counts under the filter."""
-    return games.groupBy("fide_id").agg(
-        F.array_join(F.array_sort(F.collect_set("opponent_name")), "/ ").alias(
-            "opponents"
-        ),
-        F.sum(F.when(F.col("result") == 1.0, 1).otherwise(0)).alias("num_wins"),
-        F.sum(F.when(F.col("result") == 0.5, 1).otherwise(0)).alias("num_draws"),
-        F.sum(F.when(F.col("result") == 0.0, 1).otherwise(0)).alias("num_losses"),
-    )
-
-
 def result_distribution(games: DataFrame) -> DataFrame:
     """old_scripts/fide-player-stats-en-US.py:516-519: value_counts
     (normalize=True)*100 (G6)."""
@@ -186,23 +146,4 @@ def result_distribution(games: DataFrame) -> DataFrame:
             "pct", F.round(F.lit(100.0) * F.col("n") / F.sum("n").over(w), 4)
         )
         .orderBy("fide_id", "result")
-    )
-
-
-def tournament_summary_batch(games: DataFrame) -> DataFrame:
-    """old_scripts/fide-games-scraper-public.py:78-108: per-tournament
-    points / ratio / wins / losses / rating sum with the reference's
-    exact quirks — rating_sum over int(str(x)[:4]) (H21) and
-    totalLosses = sum of zeros = 0 (:94, reproduced for pickle parity;
-    ``true_losses`` carries the corrected count)."""
-    rating4 = F.substring(F.col("opponent_rating").cast("string"), 1, 4).cast("int")
-    return games.groupBy("fide_id", "tournament_name", "date").agg(
-        F.count(F.lit(1)).alias("n_games"),
-        F.sum("result").alias("points"),
-        (F.sum("result") / F.count(F.lit(1))).alias("points_ratio"),
-        F.sum(rating4).alias("rating_sum"),
-        F.sum(F.when(F.col("result") == 1.0, F.col("result")).otherwise(0.0)).alias("wins"),
-        F.lit(0.0).alias("losses"),
-        F.sum(F.when(F.col("result") == 0.0, 1).otherwise(0)).alias("true_losses"),
-        F.floor(F.avg("opponent_rating")).cast("int").alias("opp_avg_rating"),
     )

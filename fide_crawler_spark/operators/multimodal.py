@@ -4,7 +4,7 @@ The reference carries media as refs (profile photo data-URI,
 ``ui/streamlit_ui.py:14-25``, decoded base64 → PIL; color-icon img srcs,
 ``data_processing/data_fetching_processing.py:159-162``).  At pipeline
 scale, media are opaque ``binary`` columns with a typed metadata struct;
-decode/resize/frame-sample run as Arrow-batched pandas stages over
+decode/frame-sample run as Arrow-batched pandas stages over
 ``mapInPandas``.
 
 Compressed-codec libraries (PIL/ffmpeg) are not in this container, so
@@ -221,21 +221,6 @@ def decode_media(media: DataFrame, real: bool = False) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payload through, rewrites metadata dims.
-    A real kernel would transform payload bytes inside the same
-    mapInPandas shape as decode_media."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.format").alias("format"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.n_bytes").alias("n_bytes"),
-        ),
-    )
 
 
 def frame_sample(

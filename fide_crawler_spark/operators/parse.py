@@ -30,37 +30,6 @@ from pyspark.sql import functions as F
 
 from fide_crawler_spark.fixtures import parse_page
 
-SPANS_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
-
-
-def parse_stage(fetched: DataFrame) -> DataFrame:
-    """(url, status, page) → (doc_id, spans) for successfully fetched pages.
-
-    UDTF-shaped mapInPandas (iterator of pdf → iterator of pdf), the
-    Spark surface for ``scrapePlayerGamesHistory``
-    (data_fetching_processing.py:122-205).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ok = pdf[pdf["status"] == "fetched"]
-            if not len(ok):
-                continue
-            spans = [
-                [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for (k, t, m, o) in parse_page(page)
-                ]
-                for page in ok["page"]
-            ]
-            yield pd.DataFrame({"doc_id": ok["url"].values, "spans": spans})
-
-    return fetched.mapInPandas(run, schema=SPANS_SCHEMA)
-
-
 FUSED_META_COLS = ["url_hash", "fide_id", "period", "seed_pos", "retry_count", "rank"]
 
 

@@ -79,7 +79,6 @@ class CrawlJob:
         spark: SparkSession,
         workdir: str,
         budget_per_host: int = 64,
-        n_salts: int = 8,
         fetch_mode: str = "synthetic",
         page_weight: int = 1,
         bloom_bits_per_part: int = 1 << 20,
@@ -93,7 +92,6 @@ class CrawlJob:
         self.spark = spark
         self.workdir = workdir
         self.budget = budget_per_host
-        self.n_salts = n_salts
         self.fetch_mode = fetch_mode
         self.page_weight = page_weight
         self.bloom_parts = bloom_parts

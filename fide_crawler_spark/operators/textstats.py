@@ -128,7 +128,7 @@ def corpus_ngram_topk(
     """Corpus-level top-k word n-grams — the vocabulary/BPE-prep sweep.
     ``docs`` needs a ``text`` column and a document id column named by
     ``id_col`` (passed through to ``shingle_docs``).
-    Counts DOC FREQUENCY (shingles_col dedups within a doc).  Classic
+    Counts DOC FREQUENCY (shingle_docs dedups within a doc).  Classic
     word-count shape: explode → partial-combined count → one shuffle —
     keyed on ``xxhash64(gram)`` (8-byte fixed-width key instead of a
     variable-length string, as ngram_jaccard_pairs already does; the
@@ -139,9 +139,9 @@ def corpus_ngram_topk(
     approximation already inherent in vocabulary sweeps."""
     from fide_crawler_spark.operators.dedup import shingle_docs
 
-    # shingle_docs hoists the token split into its own projection — the
-    # inline shingles_col form re-splits the text once PER SHINGLE
-    # (HOF lambdas are interpreted, no subexpression elimination).
+    # shingle_docs hoists the token split into its own projection — a
+    # split inside the transform lambda would re-split the text once PER
+    # SHINGLE (HOF lambdas are interpreted, no subexpression elimination).
     grams = shingle_docs(docs, n=n, id_col=id_col, out_col="__sh").select(
         F.explode("__sh").alias("gram")
     )

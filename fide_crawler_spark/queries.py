@@ -964,7 +964,7 @@ def q28_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MD5H = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 _M31 = D.MERSENNE
 
-# word 3-gram shingles, deduped — mirrors dedup.shingles_col(n=3)
+# word 3-gram shingles, deduped — mirrors dedup.shingle_docs(n=3)
 _GRAMS3_SQL = f"""
     toks AS (SELECT doc_id AS doc, string_split(text, ' ') AS l FROM documents),
     grams AS (
@@ -1274,7 +1274,7 @@ def q35_crawl_to_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = seed_frontier_rows(["1503014", "2020009"], "2023-01-01", 4)
     wd = tempfile.mkdtemp(prefix="q35_crawl_")
-    job = CrawlJob(spark, wd, budget_per_host=4, n_salts=2)
+    job = CrawlJob(spark, wd, budget_per_host=4)
     job.init(spark.createDataFrame(rows))
     job.run()
     docs = job.read_documents().select("doc_id", "spans")

@@ -11,6 +11,10 @@ is a thin versioned-parquet layout with the same commit semantics
     <root>/snap-00000/state/<name>.bin   opaque sidecar state (Bloom bytes)
     <root>/snap-00000/manifest.json      written LAST via tmp+rename → atomic
 
+Sidecar state is stored as its owner serializes it; the URL-seen
+filters (``operators/urlseen.py``) write zlib-deflated ``PBZ1``/``CKZ1``
+blobs and still read the raw ``PBF1``/``CKF1`` blobs of older snapshots.
+
 Like Iceberg, an **append** commit does not rewrite history: it writes
 only the new data files and a manifest whose ``data_paths`` list the
 parent snapshot's files plus its own.  An **overwrite** commit starts a

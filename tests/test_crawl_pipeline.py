@@ -8,6 +8,9 @@ resume from a snapshot after a kill.
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +20,8 @@ from fide_crawler_spark.operators.politeness import (
     politeness_cap,
     politeness_cap_naive,
 )
-from fide_crawler_spark.operators.scheduler import CrawlJob
+from fide_crawler_spark.operators.scheduler import BLOOM_STATE, CrawlJob
+from fide_crawler_spark.operators.urlseen import PartitionedBloom
 from fide_crawler_spark.oracle.sequential import run_oracle
 
 SEEDS = ["1503014", "2020009", "35009192"]
@@ -37,7 +41,7 @@ def oracle(frontier_rows):
 @pytest.fixture(scope="module")
 def job(spark, frontier_rows, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl"))
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
     return j
@@ -53,6 +57,16 @@ def spark_spans(job) -> dict[str, list[tuple]]:
     }
 
 
+def _fetched_urls(job, spark) -> set[str]:
+    return {
+        r["url"]
+        for r in job.frontier_tbl.read(spark)
+        .filter(F.col("status") == "fetched")
+        .select("url")
+        .collect()
+    }
+
+
 def test_span_sequences_match_oracle(job, oracle):
     got = spark_spans(job)
     assert set(got) == set(oracle.spans)
@@ -65,14 +79,7 @@ def test_crawl_order_matches_oracle(job, oracle):
 
 
 def test_url_seen_set_matches_oracle(job, spark, oracle):
-    fetched = {
-        r["url"]
-        for r in job.frontier_tbl.read(spark)
-        .filter(F.col("status") == "fetched")
-        .select("url")
-        .collect()
-    }
-    assert fetched == oracle.url_seen
+    assert _fetched_urls(job, spark) == oracle.url_seen
 
 
 def test_no_url_fetched_twice(job):
@@ -104,17 +111,55 @@ def test_lineage_and_metrics_recorded(job):
     ]["docs"]
 
 
+def test_bloom_state_is_stored_deflated(job):
+    """Every frontier snapshot's Bloom sidecar is the deflated blob: the
+    default filter's dense 8 × 2^20-bit array would be 1,048,604 bytes."""
+    snaps = job.frontier_tbl.snapshots()
+    assert len(snaps) >= 3
+    for snap in snaps:
+        blob = job.frontier_tbl.state(BLOOM_STATE, snap)
+        assert blob[:4] == b"PBZ1", snap
+        assert len(blob) < 64 * 1024, (snap, len(blob))
+
+
+def test_resume_from_raw_bloom_state(spark, frontier_rows, oracle, tmp_path):
+    """A snapshot written before filter compression carries the raw
+    ``PBF1`` Bloom blob (header + dense parts).  A job resumed from it
+    runs URL-seen against that filter and reaches the oracle's crawl
+    order and fetched set; its next commits write the deflated blob."""
+    wd = str(tmp_path / "rawbloom")
+    j1 = CrawlJob(spark, wd, budget_per_host=BUDGET)
+    j1.init(spark.createDataFrame(frontier_rows))
+    j1.run_epoch()
+    bf = PartitionedBloom.from_bytes(j1.frontier_tbl.state(BLOOM_STATE))
+    assert any(p.any() for p in bf.parts), "epoch 0 fetched nothing"
+    raw = b"PBF1" + np.array([bf.n_parts, bf.bits, bf.k], dtype=np.uint64).tobytes()
+    raw += b"".join(p.tobytes() for p in bf.parts)
+    state_dir = os.path.join(j1.frontier_tbl._dir(j1.frontier_tbl.latest()), "state")
+    with open(os.path.join(state_dir, BLOOM_STATE), "wb") as f:
+        f.write(raw)
+    del j1
+
+    j2 = CrawlJob(spark, wd, budget_per_host=BUDGET)
+    assert j2.epoch() == 0
+    assert j2.frontier_tbl.state(BLOOM_STATE)[:4] == b"PBF1"
+    j2.run()
+    assert j2.crawl_order() == oracle.crawl_order
+    assert _fetched_urls(j2, spark) == oracle.url_seen
+    assert j2.frontier_tbl.state(BLOOM_STATE)[:4] == b"PBZ1"
+
+
 def test_resume_identical_to_uninterrupted(spark, frontier_rows, oracle, tmp_path):
     """Kill after epoch 0 (simulated by dropping the job object), build a
     fresh CrawlJob on the same workdir, run to completion → identical
     crawl order + spans."""
     wd = str(tmp_path / "resumable")
-    j1 = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j1 = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j1.init(spark.createDataFrame(frontier_rows))
     j1.run_epoch()
     del j1
 
-    j2 = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j2 = CrawlJob(spark, wd, budget_per_host=BUDGET)
     assert j2.epoch() == 0  # resumed from snapshot, not restarted
     j2.run()
     assert j2.crawl_order() == oracle.crawl_order
@@ -130,7 +175,7 @@ def test_shuffle_partition_invariance(spark, frontier_rows, oracle, tmp_path):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        j = CrawlJob(spark, str(tmp_path / "narrow"), budget_per_host=BUDGET, n_salts=2)
+        j = CrawlJob(spark, str(tmp_path / "narrow"), budget_per_host=BUDGET)
         j.init(spark.createDataFrame(frontier_rows))
         j.run()
         assert j.crawl_order() == oracle.crawl_order
@@ -162,7 +207,7 @@ def test_flaky_fetch_retries_until_complete(spark, frontier_rows, oracle, tmp_pa
     import zlib
 
     wd = str(tmp_path / "flaky")
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=2, fetch_mode="flaky")
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET, fetch_mode="flaky")
     j.init(spark.createDataFrame(frontier_rows))
     stats = j.run()
     assert any(s.get("failed", 0) > 0 for s in stats), "no failures injected?"
@@ -183,7 +228,7 @@ def test_duplicate_admission_not_refetched(spark, frontier_rows, tmp_path):
     discovered-link / re-seed case) — they must be rejected by the Bloom
     pre-pass + anti-join, not fetched twice."""
     wd = str(tmp_path / "dupadmit")
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=2)
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
     n_docs_before = j.docs_tbl.read(spark).count()
@@ -216,13 +261,13 @@ def test_retention_bounds_history_and_preserves_output(
     counts stay bounded, and append-chain doc file sets referenced by
     the surviving manifest are untouched."""
     base = CrawlJob(
-        spark, str(tmp_path / "unbounded"), budget_per_host=BUDGET, n_salts=2
+        spark, str(tmp_path / "unbounded"), budget_per_host=BUDGET
     )
     base.init(spark.createDataFrame(frontier_rows))
     base.run()
     j = CrawlJob(
         spark, str(tmp_path / "retained"), budget_per_host=BUDGET,
-        n_salts=2, retain_snapshots=2,
+        retain_snapshots=2,
     )
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
@@ -247,18 +292,18 @@ def test_retention_resume_after_kill(spark, frontier_rows, tmp_path):
     history)."""
     wd = str(tmp_path / "ret_resume")
     j1 = CrawlJob(
-        spark, wd, budget_per_host=BUDGET, n_salts=2, retain_snapshots=2
+        spark, wd, budget_per_host=BUDGET, retain_snapshots=2
     )
     j1.init(spark.createDataFrame(frontier_rows))
     j1.run_epoch()
     j1.run_epoch()  # "killed" here: a fresh job object resumes
     j2 = CrawlJob(
-        spark, wd, budget_per_host=BUDGET, n_salts=2, retain_snapshots=2
+        spark, wd, budget_per_host=BUDGET, retain_snapshots=2
     )
     j2.run()
     ref = CrawlJob(
         spark, str(tmp_path / "ret_ref"), budget_per_host=BUDGET,
-        n_salts=2, retain_snapshots=2,
+        retain_snapshots=2,
     )
     ref.init(spark.createDataFrame(frontier_rows))
     ref.run()
@@ -270,15 +315,13 @@ def test_compaction_cycle_reclaims_doc_filesets(spark, frontier_rows, tmp_path):
     cycle: the doc table's file-set list stays bounded (compaction folds
     the append chain; the following expiry collects released sets) and
     the corpus is unchanged."""
-    import os
-
     base = CrawlJob(
-        spark, str(tmp_path / "cc_base"), budget_per_host=BUDGET, n_salts=2
+        spark, str(tmp_path / "cc_base"), budget_per_host=BUDGET
     )
     base.init(spark.createDataFrame(frontier_rows))
     base.run()
     j = CrawlJob(
-        spark, str(tmp_path / "cc_ret"), budget_per_host=BUDGET, n_salts=2,
+        spark, str(tmp_path / "cc_ret"), budget_per_host=BUDGET,
         retain_snapshots=2, compact_docs_every=2,
     )
     j.init(spark.createDataFrame(frontier_rows))
@@ -308,7 +351,7 @@ def test_epoch_caches_released_when_dequeue_raises(
 
     DataFrame = type(spark.range(1))  # the concrete (classic) class
 
-    j = CrawlJob(spark, str(tmp_path / "raise"), budget_per_host=BUDGET, n_salts=2)
+    j = CrawlJob(spark, str(tmp_path / "raise"), budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run_epoch()  # something fetched → the next epoch runs URL-seen
 

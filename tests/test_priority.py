@@ -46,8 +46,7 @@ def _varied_rows():
 def test_priority_crawl_order_matches_oracle(spark, tmp_path, budget):
     rows = _varied_rows()
     oracle = run_oracle(rows, budget)
-    j = CrawlJob(spark, str(tmp_path / f"prio{budget}"), budget_per_host=budget,
-                 n_salts=2)
+    j = CrawlJob(spark, str(tmp_path / f"prio{budget}"), budget_per_host=budget)
     j.init(spark.createDataFrame(rows))
     j.run()
     assert j.crawl_order() == oracle.crawl_order

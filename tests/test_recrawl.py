@@ -110,7 +110,7 @@ def test_scheduler_force_recrawl_end_to_end(spark, tmp_path):
 
     rows = seed_frontier_rows(["7700077"], "2023-01-01", 4)
     wd = str(tmp_path / "forced")
-    j = CrawlJob(spark, wd, budget_per_host=8, n_salts=2, enable_cuckoo=True)
+    j = CrawlJob(spark, wd, budget_per_host=8, enable_cuckoo=True)
     j.init(spark.createDataFrame(rows))
     j.run()
     docs_before = {r["doc_id"]: r["epoch"] for r in
@@ -139,7 +139,7 @@ def test_force_recrawl_noop_urls_dont_corrupt_pending(spark, tmp_path):
 
     rows = seed_frontier_rows(["9900099"], "2023-01-01", 3)
     wd = str(tmp_path / "noopforce")
-    j = CrawlJob(spark, wd, budget_per_host=8, n_salts=2, enable_cuckoo=True)
+    j = CrawlJob(spark, wd, budget_per_host=8, enable_cuckoo=True)
     j.init(spark.createDataFrame(rows))
     j.run()
     assert j.pending_count() == 0
@@ -166,7 +166,7 @@ def test_cuckoo_overflow_rebuilds(spark, tmp_path):
 
     rows = seed_frontier_rows([str(8800000 + i) for i in range(20)], "2023-01-01", 4)
     wd = str(tmp_path / "tinycuckoo")
-    j = CrawlJob(spark, wd, budget_per_host=1000, n_salts=2, enable_cuckoo=True)
+    j = CrawlJob(spark, wd, budget_per_host=1000, enable_cuckoo=True)
     j.init(spark.createDataFrame(rows))
     # shrink the persisted parts to 2 buckets × 4 slots each
     # (capacity 2×8 = 16 < 80) so the executor-side rebuild must fire

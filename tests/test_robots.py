@@ -87,7 +87,7 @@ def test_robots_filter_marks_blocked(spark):
 @pytest.fixture(scope="module")
 def robots_job(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("robots_crawl"))
-    j = CrawlJob(spark, wd, budget_per_host=5, n_salts=2, respect_robots=True)
+    j = CrawlJob(spark, wd, budget_per_host=5, respect_robots=True)
     j.init(spark.createDataFrame(_multi_host_rows()))
     j.stats = j.run()
     return j

@@ -148,7 +148,7 @@ def test_epoch_commit_touches_only_dequeued_periods(spark, tmp_path):
     from fide_crawler_spark.operators.scheduler import CrawlJob
 
     rows = seed_frontier_rows(["4040404"], "2023-01-01", 6)
-    j = CrawlJob(spark, str(tmp_path / "touch"), budget_per_host=2, n_salts=2)
+    j = CrawlJob(spark, str(tmp_path / "touch"), budget_per_host=2)
     j.init(spark.createDataFrame(rows))
     j.run_epoch()
 
@@ -226,7 +226,7 @@ def test_incremental_docs_after_epoch(spark, tmp_path):
     from fide_crawler_spark.operators.scheduler import CrawlJob
 
     rows = seed_frontier_rows(["5150515"], "2023-01-01", 4)
-    j = CrawlJob(spark, str(tmp_path / "incdocs"), budget_per_host=2, n_salts=2)
+    j = CrawlJob(spark, str(tmp_path / "incdocs"), budget_per_host=2)
     j.init(spark.createDataFrame(rows))
     j.run_epoch()
     snap1 = j.docs_tbl.latest()

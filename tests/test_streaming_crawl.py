@@ -27,7 +27,7 @@ def test_streaming_crawl_matches_batch_and_oracle(spark, tmp_path):
     with open(f"{seed_dir}/batch1.json", "w") as f:
         f.write("\n".join(json.dumps(r) for r in rows[half:] + overlap))
 
-    job = CrawlJob(spark, str(tmp_path / "wd"), budget_per_host=BUDGET, n_salts=2)
+    job = CrawlJob(spark, str(tmp_path / "wd"), budget_per_host=BUDGET)
     q = start_streaming_crawl(job, seed_dir, str(tmp_path / "ckpt"), max_files=1)
     try:
         q.processAllAvailable()
@@ -88,7 +88,7 @@ def test_streaming_crawl_with_cuckoo_and_robots(spark, tmp_path):
         f.write("\n".join(json.dumps(r) for r in mk(blocked_fid, 1)))
 
     job = CrawlJob(
-        spark, str(tmp_path / "wd2"), budget_per_host=8, n_salts=2,
+        spark, str(tmp_path / "wd2"), budget_per_host=8,
         enable_cuckoo=True, respect_robots=True,
     )
     q = start_streaming_crawl(job, seed_dir, str(tmp_path / "ckpt2"), max_files=1)
@@ -142,7 +142,7 @@ def test_blocked_metric_survives_epochs(spark, tmp_path):
         f.write(json.dumps(mk(blocked_fid, 2, 0)))
 
     job = CrawlJob(spark, str(tmp_path / "wd3"), budget_per_host=8,
-                   n_salts=2, respect_robots=True)
+                   respect_robots=True)
     q = start_streaming_crawl(job, seed_dir, str(tmp_path / "ckpt3"), max_files=1)
     try:
         q.processAllAvailable()

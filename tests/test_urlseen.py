@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from fide_crawler_spark.operators.urlseen import (
     CuckooFilter,
     PartitionedBloom,
+    PartitionedCuckoo,
     _bloom_words,
     build_bloom,
     filter_unseen,
@@ -133,6 +134,146 @@ def test_update_cuckoo_overflow_rebuilds_only_hot_part(spark):
     assert ck.parts[0].n_buckets > 2
     assert all(p.n_buckets == 2 for p in ck.parts[1:])
     assert all(ck.contains(h) for h in hs)
+
+
+# -- serialized state: deflated, legacy raw blobs still read --------------
+
+def legacy_bloom_bytes(bf: PartitionedBloom) -> bytes:
+    """The raw ``PBF1`` blob older snapshots carry: header + dense parts."""
+    header = b"PBF1" + np.array([bf.n_parts, bf.bits, bf.k], dtype=np.uint64).tobytes()
+    return header + b"".join(p.tobytes() for p in bf.parts)
+
+
+def legacy_cuckoo_bytes(cf: CuckooFilter) -> bytes:
+    """The raw ``CKF1`` blob: header + dense bucket table."""
+    return b"CKF1" + np.array([cf.n_buckets], dtype=np.uint64).tobytes() + cf.table.tobytes()
+
+
+def legacy_partitioned_cuckoo_bytes(pc: PartitionedCuckoo) -> bytes:
+    blobs = [legacy_cuckoo_bytes(p) for p in pc.parts]
+    return (
+        b"PCK1" + np.array([pc.n_parts], dtype=np.uint64).tobytes()
+        + np.array([len(b) for b in blobs], dtype=np.uint64).tobytes()
+        + b"".join(blobs)
+    )
+
+
+FILLS = ["empty", "sparse", "full"]
+
+
+def _bloom_at(fill: str) -> PartitionedBloom:
+    """Default-sized filter: no hashes, a benchmark crawl's 144, or every
+    byte random (incompressible — the worst case for the codec)."""
+    bf = PartitionedBloom()
+    if fill == "sparse":
+        bf.add_hashes(_hashes(144, 11))
+    elif fill == "full":
+        rng = np.random.default_rng(12)
+        bf.parts = [rng.integers(0, 256, p.size, dtype=np.uint8) for p in bf.parts]
+    return bf
+
+
+def _cuckoo_at(fill: str, n_buckets: int, seed: int) -> CuckooFilter:
+    """Empty, 144 inserted hashes, or every slot holding a fingerprint."""
+    cf = CuckooFilter(n_buckets)
+    if fill == "sparse":
+        for h in _hashes(144, seed):
+            assert cf.insert(int(h))
+    elif fill == "full":
+        rng = np.random.default_rng(seed)
+        cf.table = rng.integers(1, 1 << 16, cf.table.shape, dtype=np.uint16)
+    return cf
+
+
+def _partitioned_cuckoo_at(fill: str) -> PartitionedCuckoo:
+    pc = PartitionedCuckoo()
+    pc.parts = [_cuckoo_at(fill, p.n_buckets, 20 + i) for i, p in enumerate(pc.parts)]
+    return pc
+
+
+def _same_bloom(a: PartitionedBloom, b: PartitionedBloom) -> bool:
+    return (a.n_parts, a.bits, a.k) == (b.n_parts, b.bits, b.k) and all(
+        x.dtype == y.dtype and np.array_equal(x, y) for x, y in zip(a.parts, b.parts)
+    )
+
+
+def _same_cuckoo(a: CuckooFilter, b: CuckooFilter) -> bool:
+    return a.n_buckets == b.n_buckets and a.table.dtype == b.table.dtype \
+        and np.array_equal(a.table, b.table)
+
+
+@pytest.mark.parametrize("fill", FILLS)
+def test_bloom_state_roundtrip(fill):
+    bf = _bloom_at(fill)
+    blob = bf.to_bytes()
+    assert blob[:4] == b"PBZ1"
+    back = PartitionedBloom.from_bytes(blob)
+    assert _same_bloom(back, bf)
+    back.parts[0][0] ^= 1  # decoded parts are writable, private copies
+    if fill != "full":
+        # 1 MiB of bits: a default filter at a crawl's first few hundred
+        # URLs is mostly zero words
+        assert len(blob) < 16 * 1024, len(blob)
+
+
+@pytest.mark.parametrize("fill", FILLS)
+def test_cuckoo_state_roundtrip(fill):
+    cf = _cuckoo_at(fill, 1 << 12, 13)
+    blob = cf.to_bytes()
+    assert blob[:4] == b"CKZ1"
+    back = CuckooFilter.from_bytes(blob)
+    assert _same_cuckoo(back, cf)
+    back.table[0, 0] ^= 1
+    if fill != "full":
+        assert len(blob) < cf.table.nbytes // 16, len(blob)
+
+
+@pytest.mark.parametrize("fill", FILLS)
+def test_partitioned_cuckoo_state_roundtrip(fill):
+    pc = _partitioned_cuckoo_at(fill)
+    blob = pc.to_bytes()
+    assert blob[:4] == b"PCK1"
+    back = PartitionedCuckoo.from_bytes(blob)
+    assert back.n_parts == pc.n_parts
+    assert all(_same_cuckoo(a, b) for a, b in zip(back.parts, pc.parts))
+    # update_cuckoo's tasks slice one part out of the broadcast blob
+    for pid in (0, pc.n_parts - 1):
+        assert _same_cuckoo(PartitionedCuckoo.part_from_bytes(blob, pid), pc.parts[pid])
+
+
+@pytest.mark.parametrize("fill", ["sparse", "full"])
+def test_legacy_raw_blobs_decode_bit_identical(fill):
+    """Snapshots written before compression carry raw PBF1/CKF1 state;
+    they decode to the same dense arrays, and re-encode to the same
+    deflated blob as the filter they were written from."""
+    bf = _bloom_at(fill)
+    old = PartitionedBloom.from_bytes(legacy_bloom_bytes(bf))
+    assert _same_bloom(old, bf)
+    assert old.to_bytes() == bf.to_bytes()
+
+    cf = _cuckoo_at(fill, 1 << 12, 14)
+    old_cf = CuckooFilter.from_bytes(legacy_cuckoo_bytes(cf))
+    assert _same_cuckoo(old_cf, cf)
+    assert old_cf.to_bytes() == cf.to_bytes()
+
+    pc = _partitioned_cuckoo_at(fill)
+    blob = legacy_partitioned_cuckoo_bytes(pc)
+    assert all(
+        _same_cuckoo(a, b)
+        for a, b in zip(PartitionedCuckoo.from_bytes(blob).parts, pc.parts)
+    )
+    assert _same_cuckoo(PartitionedCuckoo.part_from_bytes(blob, 3), pc.parts[3])
+
+
+def test_filter_blobs_reject_unknown_magic_and_truncation():
+    blob = _bloom_at("sparse").to_bytes()
+    with pytest.raises(ValueError):
+        PartitionedBloom.from_bytes(b"XXXX" + blob[4:])
+    with pytest.raises(ValueError):  # legacy body cut short
+        PartitionedBloom.from_bytes(legacy_bloom_bytes(_bloom_at("sparse"))[:-8])
+    cblob = _cuckoo_at("sparse", 1 << 10, 15).to_bytes()
+    with pytest.raises(ValueError):
+        CuckooFilter.from_bytes(b"PBZ1" + cblob[4:])
 
 
 # -- Spark-side build and probe -------------------------------------------
