@@ -52,28 +52,6 @@ def politeness_cap(
     )
 
 
-def politeness_cap_scalable(
-    frontier: DataFrame,
-    budget_per_host: int,
-    order: list[Column] | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Fully-parallel per-host cap for huge budgets: grouped_topk
-    (range-partitioned two-pass rank — operators/rank.py) instead of a
-    per-host window, so a single hot host never serializes into one
-    task even when ``budget`` approaches the frontier size.  Identical
-    output to politeness_cap (tests/test_crawl_pipeline.py)."""
-    from fide_crawler_spark.operators.rank import grouped_topk
-
-    return grouped_topk(
-        frontier,
-        ["host"],
-        order or priority_order(),
-        k=budget_per_host,
-        num_partitions=num_partitions,
-    )
-
-
 def politeness_cap_naive(
     frontier: DataFrame,
     budget_per_host: int,

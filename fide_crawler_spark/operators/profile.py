@@ -47,8 +47,9 @@ def fetch_profile_stage(urls: DataFrame, mode: str = "synthetic") -> DataFrame:
 
     Scalar-to-struct UDTF shape (SURVEY §2.J row 2): one Arrow round
     trip, page bodies live only inside the Python worker.  ``mode``
-    mirrors the fetchers in `sources/fetcher.py` — synthetic is the
-    deterministic no-network kernel; http is the real-crawl hook.
+    mirrors the crawl's fused stage — synthetic is the deterministic
+    no-network kernel; http is the real-crawl hook (the batch fetch in
+    `sources/fetcher.py`).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -34,32 +34,28 @@ _GKEY = "__gkey"
 _MID = "__mid"
 
 
-def adaptive_range_partitions(
-    df: DataFrame, default_conf: str = "spark.sql.shuffle.partitions"
-) -> int:
+# target bytes per explicit range partition: AQE's own advisory sizing
+# ballpark (guide §2.2)
+RANGE_TARGET_BYTES = 64 << 20
+
+
+def adaptive_range_partitions(df: DataFrame) -> int:
     """Size-adaptive partition count for an explicit repartitionByRange
-    (which AQE cannot coalesce): ceil(estimated bytes / target), capped
-    at the session's shuffle-partition setting.  At cluster scale the
-    cap keeps today's behavior (the estimate exceeds partitions ×
-    target); on small inputs it stops a 5k-row frame from fanning into
-    32 near-empty sorted partitions, each paying task launch + (for the
-    two-pass operators) a stats row and a python-worker or join probe.
-    Target bytes parameterized via ``spark.graft.range.targetPartitionBytes``
-    (default 64 MB — AQE's own advisory sizing ballpark, guide §2.2)."""
-    spark = df.sparkSession
-    cap = int(spark.conf.get(default_conf))
+    (which AQE cannot coalesce): ceil(estimated bytes /
+    RANGE_TARGET_BYTES), capped at ``spark.sql.shuffle.partitions``.  At
+    cluster scale the cap keeps today's behavior (the estimate exceeds
+    partitions × target); on small inputs it stops a 5k-row frame from
+    fanning into 32 near-empty sorted partitions, each paying task
+    launch + (for the two-pass operators) a stats row and a
+    python-worker or join probe."""
+    cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     try:
-        target = int(
-            spark.conf.get(
-                "spark.graft.range.targetPartitionBytes", str(64 << 20)
-            )
-        )
         nbytes = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # estimation unavailable — keep today's behavior
         return cap
-    return max(1, min(cap, -(-nbytes // max(1, target))))
+    return max(1, min(cap, -(-nbytes // RANGE_TARGET_BYTES)))
 
 
 def grouped_rank(
@@ -200,8 +196,10 @@ def dequeue_rank(
       position ≤ budget, and assigns ``rank = survivor_offset +
       local_survivor_position``.
 
-    Output = politeness_cap_scalable(...) + grouped_rank(...) exactly
-    (asserted in tests/test_rank.py), at half the shuffle cost.
+    Output = the per-host budget cap (``row_number`` over host ≤ budget)
+    followed by a global ``row_number`` over its survivors, exactly
+    (asserted in tests/test_rank.py against those window forms), at
+    half the shuffle cost of running grouped_topk then grouped_rank.
 
     Driver fan-in is bounded: because the sort leads with the priority
     tuple (not host), a host's rows scatter across partitions, so the

@@ -16,8 +16,8 @@ Reference behavior being reproduced
   resumes from the latest manifest with identical final output
   (test_scheduler.py::test_resume).
 
-Each epoch is one batch pipeline — dequeue → fetch (mapInPandas) →
-parse → append — i.e. the ``foreachBatch`` shape of Structured
+Each epoch is one batch pipeline — dequeue → fused fetch+parse (one
+Arrow stage) → append — i.e. the ``foreachBatch`` shape of Structured
 Streaming realized as a driver loop over snapshots (SURVEY §2.I):
 simpler, and snapshot commits give exactly-once semantics for free.
 """
@@ -25,9 +25,6 @@ simpler, and snapshot commits give exactly-once semantics for free.
 from __future__ import annotations
 
 import os
-import sys
-import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,22 +43,9 @@ from fide_crawler_spark.sources.snapshot import SnapshotTable
 
 BLOOM_STATE = "urlseen-bloom.bin"
 CUCKOO_STATE = "urlseen-cuckoo.bin"
-
-# SPARK_GRAFT_EPOCH_PROFILE=1 → per-phase wall times on stderr, one
-# line per epoch (the attribution tool for per-epoch fixed overhead —
-# at bench scale the fetch work is seconds, so regressions live in
-# the commit/dequeue bookkeeping, not the pipeline).
-_PROFILE = bool(os.environ.get("SPARK_GRAFT_EPOCH_PROFILE"))
-
-
-@contextmanager
-def _phase(acc: dict | None, name: str):
-    if acc is None:
-        yield
-        return
-    t0 = time.time()
-    yield
-    acc[name] = acc.get(name, 0.0) + round(time.time() - t0, 3)
+# URL-seen shards: the Bloom and the cuckoo filter are both split by
+# url_hash % BLOOM_PARTS, so the two stay co-partitioned
+BLOOM_PARTS = 8
 
 
 class CrawlJob:
@@ -82,9 +66,7 @@ class CrawlJob:
         fetch_mode: str = "synthetic",
         page_weight: int = 1,
         bloom_bits_per_part: int = 1 << 20,
-        bloom_parts: int = 8,
         enable_cuckoo: bool = False,
-        cuckoo_buckets_per_part: int = 1 << 13,
         respect_robots: bool = False,
         retain_snapshots: int | None = None,
         compact_docs_every: int | None = None,
@@ -94,10 +76,8 @@ class CrawlJob:
         self.budget = budget_per_host
         self.fetch_mode = fetch_mode
         self.page_weight = page_weight
-        self.bloom_parts = bloom_parts
         self.bloom_bits = bloom_bits_per_part
         self.enable_cuckoo = enable_cuckoo
-        self.cuckoo_buckets_per_part = cuckoo_buckets_per_part
         self.respect_robots = respect_robots
         # retention (Iceberg expire_snapshots): keep the newest K
         # snapshots of frontier+documents after each epoch commit.  At
@@ -146,12 +126,10 @@ class CrawlJob:
             self.robots_tbl.commit(robots, metrics={"epoch": -1})
             robots = self.robots_tbl.read(frontier.sparkSession)
             frontier = robots_filter(frontier, robots, mark=True)
-        bloom = PartitionedBloom(self.bloom_parts, self.bloom_bits)
+        bloom = PartitionedBloom(BLOOM_PARTS, self.bloom_bits)
         state = {BLOOM_STATE: bloom.to_bytes()}
         if self.enable_cuckoo:
-            state[CUCKOO_STATE] = PartitionedCuckoo(
-                self.bloom_parts, self.cuckoo_buckets_per_part
-            ).to_bytes()
+            state[CUCKOO_STATE] = PartitionedCuckoo(BLOOM_PARTS).to_bytes()
 
         # single materialization: status counts derived from the written
         # files (finalize pattern), not from extra jobs over the input
@@ -190,8 +168,6 @@ class CrawlJob:
     # -- one epoch -----------------------------------------------------------
     def run_epoch(self) -> dict:
         spark = self.spark
-        prof: dict | None = {} if _PROFILE else None
-        t_epoch = time.time()
         e = self.epoch() + 1
         frontier = self.frontier_tbl.read(spark)
         pending = frontier.filter(F.col("status") == "pending")
@@ -229,170 +205,145 @@ class CrawlJob:
             # rank in one sorted pass (operators/rank.py dequeue_rank — a
             # windowed rank would serialize the batch into one task); it
             # registers its persisted sort layout in _caches.
-            with _phase(prof, "dequeue"):
-                batch = dequeue_rank(
-                    candidates, "host", priority_order(), self.budget, "rank",
-                    caches=_caches, stats_out=_stats,
-                ).persist()
+            batch = dequeue_rank(
+                candidates, "host", priority_order(), self.budget, "rank",
+                caches=_caches, stats_out=_stats,
+            ).persist()
             _caches.append(batch)
-            return self._run_epoch_body(
-                spark, e, m, frontier, bloom, batch, _stats["n_survivors"],
-                prof,
+            # n_batch comes from the dequeue's own pass-1 statistics — no
+            # extra count() job; the batch cache materializes lazily inside
+            # the fetch stage's first action.
+            n_batch = _stats["n_survivors"]
+            if n_batch == 0:
+                return {"epoch": e, "dequeued": 0, "done": True}
+
+            # fused fetch+parse (one Arrow round-trip, meta passthrough, no
+            # join — see parse.fetch_parse_stage).  The batch leaves the
+            # rank stage range-partitioned by priority — rebalance on url so
+            # the fetch/parse Arrow workers use every core.
+            n_fetch_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            docs_all = fetch_parse_stage(
+                batch.repartition(n_fetch_parts, "url"),
+                mode=self.fetch_mode,
+                weight=self.page_weight,
             )
-        finally:
-            for c in _caches:
-                c.unpersist()
-            if prof is not None:
-                prof["epoch_total"] = round(time.time() - t_epoch, 3)
-                print(f"[epoch-profile] e={e} {prof}", file=sys.stderr)
-
-    def _run_epoch_body(
-        self, spark, e, m, frontier, bloom, batch, n_batch, prof=None
-    ) -> dict:
-        # n_batch comes from the dequeue's own pass-1 statistics — no
-        # extra count() job; the batch cache materializes lazily inside
-        # the fetch stage's first action.
-        if n_batch == 0:
-            return {"epoch": e, "dequeued": 0, "done": True}
-
-        # fused fetch+parse (one Arrow round-trip, meta passthrough, no
-        # join — see parse.fetch_parse_stage).  The batch leaves the
-        # rank stage range-partitioned by priority — rebalance on url so
-        # the fetch/parse Arrow workers use every core.
-        n_fetch_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        docs_all = fetch_parse_stage(
-            batch.repartition(n_fetch_parts, "url"),
-            mode=self.fetch_mode,
-            weight=self.page_weight,
-        )
-        docs_ok = (
-            docs_all.filter(F.col("status") == "fetched")
-            .drop("status")
-            .withColumnRenamed("rank", "crawl_rank")
-            .withColumn("epoch", F.lit(e))
-            # precomputed so metadata queries (lineage, bench checksums)
-            # never have to re-read the nested spans column
-            .withColumn("n_spans", F.size("spans"))
-        )
-
-        # single materialization: commit the span snapshot; exact
-        # metrics + per-file lineage come from the written files
-        # (Iceberg manifest-stats pattern)
-        def finalize(data_path: str):
-            t0 = time.time()
-            per_file = (
-                spark.read.parquet(data_path)
-                .groupBy(F.input_file_name().alias("file"))
-                .agg(F.count(F.lit(1)).alias("docs"), F.sum("n_spans").alias("spans"))
-                .collect()
+            docs_ok = (
+                docs_all.filter(F.col("status") == "fetched")
+                .drop("status")
+                .withColumnRenamed("rank", "crawl_rank")
+                .withColumn("epoch", F.lit(e))
+                # precomputed so metadata queries (lineage, bench checksums)
+                # never have to re-read the nested spans column
+                .withColumn("n_spans", F.size("spans"))
             )
-            if prof is not None:
-                prof["docs_finalize"] = prof.get("docs_finalize", 0.0) + round(
-                    time.time() - t0, 3
+
+            # single materialization: commit the span snapshot; exact
+            # metrics + per-file lineage come from the written files
+            # (Iceberg manifest-stats pattern)
+            def finalize(data_path: str):
+                per_file = (
+                    spark.read.parquet(data_path)
+                    .groupBy(F.input_file_name().alias("file"))
+                    .agg(F.count(F.lit(1)).alias("docs"), F.sum("n_spans").alias("spans"))
+                    .collect()
                 )
-            lineage = [
-                {
-                    "file": os.path.basename(r["file"]),
-                    "docs": int(r["docs"]),
-                    "spans": int(r["spans"]),
-                }
-                for r in per_file
-            ]
-            n = sum(x["docs"] for x in lineage)
-            return {"epoch": e, "docs": n}, lineage
+                lineage = [
+                    {
+                        "file": os.path.basename(r["file"]),
+                        "docs": int(r["docs"]),
+                        "spans": int(r["spans"]),
+                    }
+                    for r in per_file
+                ]
+                n = sum(x["docs"] for x in lineage)
+                return {"epoch": e, "docs": n}, lineage
 
-        with _phase(prof, "fetch_parse_commit"):
             docs_snap = self.docs_tbl.commit(
                 docs_ok, mode="append", finalize=finalize
             )
-        docs_manifest = self.docs_tbl.manifest(docs_snap)
-        n_fetched = int(docs_manifest["metrics"]["docs"])
-        n_failed = n_batch - n_fetched
-        lineage = docs_manifest["lineage"]
+            docs_manifest = self.docs_tbl.manifest(docs_snap)
+            n_fetched = int(docs_manifest["metrics"]["docs"])
+            n_failed = n_batch - n_fetched
+            lineage = docs_manifest["lineage"]
 
-        # frontier state transition from the committed snapshot: fetched
-        # keys = this epoch's written doc_ids; dequeued-but-missing rows
-        # failed → retry_count+1, stay pending
-        epoch_dir = os.path.join(self.docs_tbl.root, f"snap-{docs_snap:05d}/data")
-        fetched_keys = (
-            spark.read.parquet(epoch_dir)
-            .select(F.col("doc_id").alias("url"))
-            .withColumn("_new_status", F.lit("fetched"))
-        )
-        failed_keys = (
-            batch.select("url")
-            .join(fetched_keys.select("url"), "url", "left_anti")
-            .withColumn("_new_status", F.lit("failed"))
-        )
-        outcome = fetched_keys.unionByName(failed_keys)
-        # touched-partition rewrite (Iceberg dynamic overwrite): only
-        # the period partitions the dequeue actually touched are
-        # rewritten — at a 10^10-row frontier the untouched months'
-        # files carry forward by manifest reference, not by re-write.
-        # The touched-value collect is metadata-scale (≤ distinct
-        # periods in one politeness-bounded batch).
-        with _phase(prof, "touched_collect"):
+            # frontier state transition from the committed snapshot: fetched
+            # keys = this epoch's written doc_ids; every other dequeued row
+            # failed → retry_count+1, stays pending.
+            epoch_dir = os.path.join(self.docs_tbl.root, f"snap-{docs_snap:05d}/data")
+            fetched_keys = spark.read.parquet(epoch_dir).select(
+                F.col("doc_id").alias("url")
+            )
+            # touched-partition rewrite (Iceberg dynamic overwrite): only
+            # the period partitions the dequeue actually touched are
+            # rewritten — at a 10^10-row frontier the untouched months'
+            # files carry forward by manifest reference, not by re-write.
+            # The touched-value collect is metadata-scale (≤ distinct
+            # periods in one politeness-bounded batch).
             touched = [
                 r["period"] for r in batch.select("period").distinct().collect()
             ]
-        new_frontier = (
-            frontier.filter(F.col("period").isin(touched))
-            .join(outcome, "url", "left")
-            .withColumn(
-                "retry_count",
-                F.when(F.col("_new_status") == "failed", F.col("retry_count") + 1)
-                .otherwise(F.col("retry_count")),
+            # The frontier joins the dequeued and the fetched keys one at a
+            # time, each a small build side Spark broadcasts while the
+            # frontier streams in file order.  Joining batch to
+            # fetched_keys first would not do: Spark sizes a left join as
+            # the product of its inputs, so that outcome frame would be
+            # shuffled against the frontier instead of broadcast.
+            fetched = F.col("_fetched").isNotNull()
+            new_frontier = (
+                frontier.filter(F.col("period").isin(touched))
+                .join(batch.select("url", F.lit(True).alias("_dequeued")), "url", "left")
+                .join(fetched_keys.withColumn("_fetched", F.lit(True)), "url", "left")
+                .withColumn(
+                    "retry_count",
+                    F.when(
+                        F.col("_dequeued").isNotNull() & ~fetched,
+                        F.col("retry_count") + 1,
+                    ).otherwise(F.col("retry_count")),
+                )
+                .withColumn(
+                    "status",
+                    F.when(fetched, F.lit("fetched")).otherwise(F.col("status")),
+                )
+                .withColumn(
+                    "epoch", F.when(fetched, F.lit(e)).otherwise(F.col("epoch"))
+                )
+                .drop("_dequeued", "_fetched")
             )
-            .withColumn(
-                "status",
-                F.when(F.col("_new_status") == "fetched", F.lit("fetched"))
-                .otherwise(F.col("status")),
-            )
-            .withColumn(
-                "epoch",
-                F.when(F.col("_new_status") == "fetched", F.lit(e))
-                .otherwise(F.col("epoch")),
-            )
-            .drop("_new_status")
-        )
 
-        # Bloom maintenance: one JVM aggregate over this epoch's fetched
-        # hashes (from the committed files), OR-merged
-        with _phase(prof, "bloom_build"):
+            # Bloom maintenance: one JVM aggregate over this epoch's fetched
+            # hashes (from the committed files), OR-merged
             epoch_bloom = build_bloom(
                 fetched_keys.select(F.xxhash64("url").alias("url_hash")),
-                "url_hash", self.bloom_parts, self.bloom_bits,
+                "url_hash", BLOOM_PARTS, self.bloom_bits,
             )
             bloom.merge(epoch_bloom)
 
-        state = {BLOOM_STATE: bloom.to_bytes()}
-        if self.enable_cuckoo:
-            # deletable URL-seen variant: maintained alongside the Bloom
-            # so force_recrawl can remove fingerprints (Bloom cannot).
-            # Sharded per url_hash % n_parts exactly like
-            # PartitionedBloom: this epoch's hashes are shuffled to
-            # their parts and inserted executor-side; an overflowing
-            # part is rebuilt bigger (again executor-side) from the
-            # fetched rows of the updated frontier.  The driver handles
-            # filter blobs only — no collect() of row-scale data.
-            ck = PartitionedCuckoo.from_bytes(self.frontier_tbl.state(CUCKOO_STATE))
-            epoch_hashes = fetched_keys.select(F.xxhash64("url").alias("url_hash"))
-            # rebuild source of truth = previously fetched (parent
-            # snapshot) ∪ this epoch's fetches — disjoint sets, since an
-            # epoch only dequeues pending rows
-            all_fetched = (
-                frontier.filter(F.col("status") == "fetched")
-                .select("url_hash")
-                .unionByName(epoch_hashes)
-            )
-            with _phase(prof, "cuckoo_update"):
+            state = {BLOOM_STATE: bloom.to_bytes()}
+            if self.enable_cuckoo:
+                # deletable URL-seen variant: maintained alongside the Bloom
+                # so force_recrawl can remove fingerprints (Bloom cannot).
+                # Sharded per url_hash % n_parts exactly like
+                # PartitionedBloom: this epoch's hashes are shuffled to
+                # their parts and inserted executor-side; an overflowing
+                # part is rebuilt bigger (again executor-side) from the
+                # fetched rows of the updated frontier.  The driver handles
+                # filter blobs only — no collect() of row-scale data.
+                ck = PartitionedCuckoo.from_bytes(self.frontier_tbl.state(CUCKOO_STATE))
+                epoch_hashes = fetched_keys.select(F.xxhash64("url").alias("url_hash"))
+                # rebuild source of truth = previously fetched (parent
+                # snapshot) ∪ this epoch's fetches — disjoint sets, since an
+                # epoch only dequeues pending rows
+                all_fetched = (
+                    frontier.filter(F.col("status") == "fetched")
+                    .select("url_hash")
+                    .unionByName(epoch_hashes)
+                )
                 ck = update_cuckoo(spark, epoch_hashes, all_fetched, ck)
-            state[CUCKOO_STATE] = ck.to_bytes()
+                state[CUCKOO_STATE] = ck.to_bytes()
 
-        # pending after this epoch = previous pending − fetched (failed
-        # rows stay pending); derived from metrics to save a recompute
-        n_pending = self.pending_count() - n_fetched
-        with _phase(prof, "frontier_commit"):
+            # pending after this epoch = previous pending − fetched (failed
+            # rows stay pending); derived from metrics to save a recompute
+            n_pending = self.pending_count() - n_fetched
             self.frontier_tbl.commit_partition_overwrite(
                 new_frontier,
                 "period",
@@ -409,27 +360,28 @@ class CrawlJob:
                 state=state,
                 lineage=lineage,
             )
-        if (
-            self.compact_docs_every is not None
-            and e % self.compact_docs_every == 0
-            and len(self.docs_tbl.manifest()["data_paths"]) > 1
-        ):
-            with _phase(prof, "compact_docs"):
+            if (
+                self.compact_docs_every is not None
+                and e % self.compact_docs_every == 0
+                and len(self.docs_tbl.manifest()["data_paths"]) > 1
+            ):
                 self.docs_tbl.compact(spark)
-        if self.retain_snapshots is not None:
-            # after the commit point only — an expired history can never
-            # be observed mid-epoch
-            with _phase(prof, "expire_snapshots"):
+            if self.retain_snapshots is not None:
+                # after the commit point only — an expired history can never
+                # be observed mid-epoch
                 self.frontier_tbl.expire_snapshots(self.retain_snapshots)
                 self.docs_tbl.expire_snapshots(self.retain_snapshots)
-        return {
-            "epoch": e,
-            "dequeued": n_batch,
-            "fetched": n_fetched,
-            "failed": n_failed,
-            "pending": n_pending,
-            "done": n_pending == 0,
-        }
+            return {
+                "epoch": e,
+                "dequeued": n_batch,
+                "fetched": n_fetched,
+                "failed": n_failed,
+                "pending": n_pending,
+                "done": n_pending == 0,
+            }
+        finally:
+            for c in _caches:
+                c.unpersist()
 
     def run(self, max_epochs: int = 1000) -> list[dict]:
         stats = []

@@ -360,14 +360,33 @@ class PartitionedCuckoo:
         return header + lens + b"".join(blobs)
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "PartitionedCuckoo":
-        assert blob[:4] == cls.MAGIC, "bad partitioned-cuckoo blob"
+    def _header(cls, blob: bytes) -> tuple[np.ndarray, int]:
+        """Per-part blob lengths and the offset of part 0's blob.  Blobs
+        are read back from snapshot files, so a bad magic or a length
+        table cut short raises."""
+        if blob[:4] != cls.MAGIC or len(blob) < 12:
+            raise ValueError(f"bad partitioned-cuckoo header {bytes(blob[:12])!r}")
         n_parts = int(np.frombuffer(blob[4:12], dtype=np.uint64)[0])
-        lens = np.frombuffer(blob[12:12 + 8 * n_parts], dtype=np.uint64)
-        pc = cls.__new__(cls)
-        pc.n_parts = n_parts
-        pc.parts = []
         off = 12 + 8 * n_parts
+        if len(blob) < off:
+            raise ValueError(
+                f"partitioned-cuckoo blob of {len(blob)} bytes is shorter "
+                f"than its {n_parts}-part length table"
+            )
+        lens = np.frombuffer(blob[12:off], dtype=np.uint64)
+        if len(blob) != off + int(lens.sum()):
+            raise ValueError(
+                f"partitioned-cuckoo blob is {len(blob)} bytes, its length "
+                f"table says {off + int(lens.sum())}"
+            )
+        return lens, off
+
+    @classmethod
+    def from_bytes(cls, blob: bytes) -> "PartitionedCuckoo":
+        lens, off = cls._header(blob)
+        pc = cls.__new__(cls)
+        pc.n_parts = len(lens)
+        pc.parts = []
         for ln in lens:
             pc.parts.append(CuckooFilter.from_bytes(blob[off:off + int(ln)]))
             off += int(ln)
@@ -379,10 +398,10 @@ class PartitionedCuckoo:
         executor tasks own a few pids and must not materialize all
         n_parts tables (that would defeat the per-task memory bound the
         sharding provides)."""
-        assert blob[:4] == cls.MAGIC, "bad partitioned-cuckoo blob"
-        n_parts = int(np.frombuffer(blob[4:12], dtype=np.uint64)[0])
-        lens = np.frombuffer(blob[12:12 + 8 * n_parts], dtype=np.uint64)
-        off = 12 + 8 * n_parts + int(lens[:pid].sum())
+        lens, off = cls._header(blob)
+        if not 0 <= pid < len(lens):
+            raise ValueError(f"part {pid} out of range for {len(lens)} parts")
+        off += int(lens[:pid].sum())
         return CuckooFilter.from_bytes(blob[off:off + int(lens[pid])])
 
 

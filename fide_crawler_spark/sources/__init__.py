@@ -1,2 +1,1 @@
-from fide_crawler_spark.sources.fetcher import fetch_stage  # noqa: F401
 from fide_crawler_spark.sources.snapshot import SnapshotTable  # noqa: F401

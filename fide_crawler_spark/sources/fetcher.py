@@ -1,46 +1,34 @@
-"""Vectorized fetch stage.
+"""HTTP batch fetch for the fused fetch+parse stage.
 
 The reference fetches one URL at a time in a Python for-loop
 (``data_processing/data_fetching_processing.py:140-147``) with a 10 s
 socket timeout and swallow-and-skip error handling (``:195-196``).
-Here fetching is a ``mapInPandas`` stage: each executor task receives an
-Arrow batch of frontier rows and returns (url, status, page) — the
-scheduler keeps failed URLs in the frontier with a bumped
-``retry_count`` (reference analog: ``@retry(delay=10)`` at
+
+The fetch modes (``synthetic``, ``flaky``, ``http``) belong to the fused
+stage, ``operators.parse.fetch_parse_stage``: each executor task fetches
+and parses one Arrow batch of frontier rows, and failed URLs come back
+with ``status='failed'`` so the scheduler keeps them in the frontier
+with a bumped ``retry_count`` (reference analog: ``@retry(delay=10)`` at
 ``old_scripts/fide-games-scraper-public.py:48``).
 
-Two fetchers behind one interface:
-
-* ``synthetic`` (default) — pure function of the URL via
-  ``fixtures.render_page``; deterministic, no network, used by all
-  tests and benchmarks.
-* ``http`` — real ``urllib`` GET with timeout (default 10 s, matching
-  the reference's socket timeout at
-  ``old_scripts/fide-games-scraper-public.py:22``); exercised without
-  network by an in-process ``http.server`` fixture
-  (tests/test_fetcher_http.py) that serves the same deterministic
-  payloads, asserting span-sequence equality with the synthetic path
-  plus 404 / timeout → ``status='failed'`` behavior.
+This module holds the ``http`` mode's batch fetch, which the crawl,
+profile and player-search stages call inside their Python workers: a real
+``urllib`` GET per URL with a timeout (default 10 s, matching the
+reference's socket timeout at
+``old_scripts/fide-games-scraper-public.py:22``).  It is exercised
+without network by an in-process ``http.server`` fixture
+(tests/test_fetcher_http.py) that serves the same deterministic
+payloads as the synthetic mode.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-from pyspark.sql import DataFrame
-
-from fide_crawler_spark.fixtures import render_page
-
-FETCH_SCHEMA = "url string, status string, page string"
-
-
-def _synthetic_fetch_batch(urls: pd.Series, weight: int = 1) -> pd.DataFrame:
-    pages = [render_page(u, weight) for u in urls]
-    return pd.DataFrame({"url": urls, "status": "fetched", "page": pages})
 
 
 def _http_fetch_batch(urls: pd.Series, timeout: float = 10.0) -> pd.DataFrame:
+    """urls → (url, status, page); any error gives ``status='failed'``
+    and an empty page, never an exception."""
     import urllib.request
 
     statuses, pages = [], []
@@ -53,29 +41,3 @@ def _http_fetch_batch(urls: pd.Series, timeout: float = 10.0) -> pd.DataFrame:
             pages.append("")
             statuses.append("failed")
     return pd.DataFrame({"url": urls, "status": statuses, "page": pages})
-
-
-def fetch_stage(
-    frontier_batch: DataFrame,
-    mode: str = "synthetic",
-    weight: int = 1,
-    timeout: float = 10.0,
-) -> DataFrame:
-    """frontier rows (must contain ``url``) → (url, status, page).
-
-    One Arrow round-trip per partition; page bodies never touch the
-    driver.  At cluster scale the fetch partitioning is whatever the
-    politeness stage produced (per-host salted groups), so connection
-    reuse per host falls out naturally.
-    """
-    if mode == "synthetic":
-        fetch = lambda urls: _synthetic_fetch_batch(urls, weight)  # noqa: E731
-    else:
-        fetch = lambda urls: _http_fetch_batch(urls, timeout)  # noqa: E731
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield fetch(pdf["url"])
-
-    return frontier_batch.select("url").mapInPandas(run, schema=FETCH_SCHEMA)

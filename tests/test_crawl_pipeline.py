@@ -381,3 +381,51 @@ def test_epoch_caches_released_when_dequeue_raises(
     monkeypatch.undo()
     j.run()
     assert j.crawl_order() == oracle.crawl_order
+
+
+def _join_types(plan) -> list[str]:
+    """Join types of a logical plan, not descending into cached
+    relations (an InMemoryRelation is a leaf)."""
+    found = []
+    if plan.getClass().getSimpleName() == "Join":
+        found.append(plan.joinType().toString())
+    kids = plan.children()
+    for i in range(kids.size()):
+        found += _join_types(kids.apply(i))
+    return found
+
+
+def test_frontier_update_has_no_anti_join(
+    spark, frontier_rows, oracle, tmp_path, monkeypatch
+):
+    """Each dequeued URL's outcome (fetched if its doc was written, else
+    failed) comes from left joins of the frontier against the batch and
+    the written doc ids: the frontier update plan carries no anti-join,
+    and failed rows still retry to completion."""
+    from fide_crawler_spark.sources.snapshot import SnapshotTable
+
+    joins: list[list[str]] = []
+    real = SnapshotTable.commit_partition_overwrite
+
+    def capture(self, updates, *a, **kw):
+        if kw.get("touched_values") is not None:  # an epoch's commit
+            joins.append(_join_types(updates._jdf.queryExecution().optimizedPlan()))
+        return real(self, updates, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit_partition_overwrite", capture)
+    j = CrawlJob(spark, str(tmp_path / "outcome"), budget_per_host=BUDGET,
+                 fetch_mode="flaky")
+    j.init(spark.createDataFrame(frontier_rows))
+    stats = j.run()
+    assert any(s.get("failed", 0) > 0 for s in stats)
+    assert joins and all(js == ["LeftOuter", "LeftOuter"] for js in joins), joins
+    assert stats[-1]["pending"] == 0
+    assert _fetched_urls(j, spark) == oracle.url_seen
+
+
+def test_empty_epoch_releases_its_caches(spark, job):
+    """The ``dequeued == 0`` early return leaves no cache behind."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert job.run_epoch() == {"epoch": job.epoch() + 1, "dequeued": 0, "done": True}
+    assert set(jsc.getPersistentRDDs().keySet()) == before

@@ -276,6 +276,33 @@ def test_filter_blobs_reject_unknown_magic_and_truncation():
         CuckooFilter.from_bytes(b"PBZ1" + cblob[4:])
 
 
+@pytest.mark.parametrize(
+    "decode",
+    [PartitionedCuckoo.from_bytes, lambda b: PartitionedCuckoo.part_from_bytes(b, 0)],
+    ids=["from_bytes", "part_from_bytes"],
+)
+def test_partitioned_cuckoo_rejects_bad_header(decode):
+    """A bad PCK1 header raises ValueError (not assert, which
+    ``python -O`` strips) through both entry points, whichever part is
+    asked for."""
+    blob = _partitioned_cuckoo_at("sparse").to_bytes()
+    with pytest.raises(ValueError, match="header"):
+        decode(b"JUNK" + blob[4:])
+    with pytest.raises(ValueError, match="header"):
+        decode(blob[:8])  # cut inside the part count
+    with pytest.raises(ValueError, match="length table"):
+        decode(blob[:12 + 8 * 3])  # 8 parts, 3 lengths
+    with pytest.raises(ValueError, match="length table says"):
+        decode(blob[:-16])  # the last part's body cut short
+
+
+def test_partitioned_cuckoo_part_out_of_range():
+    blob = _partitioned_cuckoo_at("empty").to_bytes()
+    for pid in (-1, 8):
+        with pytest.raises(ValueError, match="out of range"):
+            PartitionedCuckoo.part_from_bytes(blob, pid)
+
+
 # -- Spark-side build and probe -------------------------------------------
 
 def _url_hashes(spark, n: int, seed: int):
